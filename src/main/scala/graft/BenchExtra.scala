@@ -3,6 +3,7 @@ import org.apache.spark.sql.SparkSession
 import graft.core.LinkConfig
 import graft.ingest.{Ingest, PagesSynth}
 import graft.link.Linker
+import scala.util.control.NonFatal
 
 /** Round-6 optimization helper (guide §1.4): time a SUBSET of the declared
   * queries in isolation with the same session/config/methodology as
@@ -60,17 +61,21 @@ object BenchExtra {
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(dir.resolve(s"${name}_$tag.txt"), plan)
       }
-      val samples = (1 to runs).map { _ =>
+      // a failed run is no sample: it never enters min or TOTAL
+      val samples = (1 to runs).flatMap { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-          raw.println(s"ERROR $name: ${e.getMessage.take(300)}"); -1L }
-        (System.nanoTime() - t0) / 1e9
+        try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case NonFatal(e) =>
+          raw.println(s"ERROR $name: ${String.valueOf(e.getMessage).take(300)}"); None }
       }
-      raw.println(f"$name%-28s min=${samples.min}%8.3f  samples=${samples.map(s => f"$s%.3f").mkString(",")}")
-      name -> samples.min
+      val failed = if (samples.size < runs) s"  FAILED=${runs - samples.size}" else ""
+      if (samples.isEmpty) raw.println(f"$name%-28s FAILED")
+      else raw.println(f"$name%-28s min=${samples.min}%8.3f  samples=${samples.map(s => f"$s%.3f").mkString(",")}$failed")
+      name -> samples.minOption
     }
-    val total = results.map(_._2).sum
-    raw.println(f"TOTAL ${results.size} queries: $total%.3f s")
+    val timed = results.flatMap(_._2)
+    raw.println(f"TOTAL ${timed.size} queries: ${timed.sum}%.3f s" +
+      (if (timed.size < results.size) s" (${results.size - timed.size} FAILED, excluded)" else ""))
     spark.stop()
   }
 }

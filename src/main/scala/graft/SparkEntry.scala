@@ -527,7 +527,7 @@ object SparkEntry {
           col("row_b").cast("long").as("rec1"))
       // 5 per-threshold agg branches all re-read the edge set; the
       // upstream is the scoring kernel — persist so it runs once, not 5x
-      val edges = Dedup.persistLatestPublic("threshold_f1_edges",
+      val edges = graft.core.CacheSlots.persistLatest("threshold_f1_edges",
         Pipeline.edges(febrl4Blocked(s), LinkConfig(threshold = 0.7))
           .toDF().select($"rec0", $"rec1", $"sim"))
       val nTrue = truth.count()
@@ -2796,7 +2796,7 @@ object SparkEntry {
       val b = docs(s, dir)
         .groupBy(element_at(split(col("text"), " "), 1).as("block_key"))
         .agg(count(lit(1)).as("n"))
-      val (k1, k2) = graft.link.Salting.fanout(col("n"), aim = 50L, maxK = 16)
+      val (k1, k2) = graft.link.Salting.fanout(col("n"), aim = lit(50L), maxK = 16)
       b.select(col("block_key"), col("n"), k1.as("k1"), k2.as("k2"))
         .withColumn("eff_k", (col("k1") * col("k2")).cast("long"))
         .withColumn("n_chunk_tasks",

@@ -42,8 +42,8 @@ object Solver {
     // consumers as separate stages with no exchange reuse — without a
     // persist the kernel chain runs once per consumer (measured round 6:
     // 2x the kernel on every clusters pipeline). One-slot discipline via
-    // Dedup.persistLatestPublic; CC's own count() materializes the cache.
-    val nodeEdges = graft.dedup.Dedup.persistLatestPublic("solver_edges",
+    // CacheSlots.persistLatest; CC's own count() materializes the cache.
+    val nodeEdges = graft.core.CacheSlots.persistLatest("solver_edges",
       edges.map(e =>
         (NodeId(e.dp0, e.rec0), NodeId(e.dp1, e.rec1), e.sim))
         .toDF("u", "v", "sim"))
@@ -151,7 +151,7 @@ object Solver {
     // pairs — but cheap to make unconditional)
     // consumed three times (two argmax aggs + the final join); the
     // upstream is the scoring kernel — persist so it runs once
-    val e = graft.dedup.Dedup.persistLatestPublic("mutual_best_edges",
+    val e = graft.core.CacheSlots.persistLatest("mutual_best_edges",
       edges.groupBy("dp0", "rec0", "dp1", "rec1")
         .agg(max(col("sim")).as("sim")))
     // deterministic argmax: min of (-sim, partner) == (sim DESC, id ASC)

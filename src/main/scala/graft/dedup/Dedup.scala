@@ -3,7 +3,10 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.CacheSlots.persistLatest
+import graft.expr.pinAbove
 import graft.ingest.Blocking
+import graft.link.Salting
 import scala.util.hashing.MurmurHash3
 
 /** Deduplication operators for a training-data pipeline: exact
@@ -46,32 +49,13 @@ object Dedup {
     * paid only where skew exists; a hot bucket becomes k^2 ~ n^2/aim
     * well-sized tasks instead of one quadratic straggler.
     *
-    * Only SKEWED buckets (k > 1 — typically few) ride the broadcast; the
-    * exploded LSH-band paths have O(n·bands) distinct bucket keys and a
-    * full-stats broadcast would collect O(n) rows to the driver at scale.
-    * Normal buckets default to k=1 via the left join + coalesce.
+    * The aim adapts to the job size ([[graft.link.Salting.adaptiveAim]]).
     *
     * Output: bk, id0, id1, and payload columns suffixed 0/1.
     */
   def saltedSelfPairs(base: DataFrame, aim: Long = PairAim,
       maxK: Int = 4096): DataFrame = {
     val payload = base.columns.filterNot(c => c == "bk" || c == "id")
-    // Adaptive aim (the Linker.scoreCandidatesChunked rule, guide §2):
-    // when the WHOLE job is smaller than aim·parallelism, a fixed aim
-    // leaves the comparison work in a handful of bucket-keyed tasks —
-    // measured round 6: 25 brand buckets hashed into 32 partitions put
-    // 2-3 buckets on one core while half the box idled. Targeting
-    // ~3 waves per core splits small jobs across the cluster; big jobs
-    // (totalPairs >= 6·parallelism·aim) keep the caller's aim, so scale
-    // behavior and shuffle replication (~n²·bytes/sqrt(aim) per bucket)
-    // are unchanged where they matter. The 1M floor stops small jobs
-    // from over-salting (a 100K floor was measured to slow the FS family
-    // ~1 s: 16 salt cells per uniform 800-row bucket, 4x join-input
-    // replication for nothing). The job total rides the plan as a
-    // 1-row scalar broadcast — an earlier draft used a driver action
-    // here, which taxed every sub-second salted query ~0.3-0.5 s.
-    val parallelism =
-      math.max(base.sparkSession.sparkContext.defaultParallelism, 1)
     // slot-cached (NO eager action — it materializes inside the
     // broadcast build): the stats frame feeds both the job-total scalar
     // and the per-bucket fan-out rows; without the cache the base
@@ -79,79 +63,29 @@ object Dedup {
     // once per consumer
     val stats0 = persistLatest("salted_stats",
       base.groupBy(col("bk")).agg(count(lit(1)).as("n")))
-    val tot = stats0.agg(
-      coalesce(sum(col("n").cast("decimal(38,0)") * col("n")), lit(0))
-        .cast("double").as("__tp"))
-    val aimCol = greatest(lit(1000000.0),
-      least(lit(aim.toDouble), col("__tp") / lit(6.0 * parallelism) + 1))
-    val (k1c, k2c) = graft.link.Salting.fanoutCol(col("n"), aimCol, maxK)
-    val stats = stats0.crossJoin(broadcast(tot))
-      .select(col("bk"), k1c.as("k1"), k2c.as("k2"))
-      .where(col("k1") > 1 || col("k2") > 1)
-    val salted = base.join(broadcast(stats), Seq("bk"), "left")
-      .withColumn("k1", coalesce(col("k1"), lit(1)))
-      .withColumn("k2", coalesce(col("k2"), lit(1)))
-      .withColumn("s",
-        pmod(xxhash64(col("id")), (col("k1") * col("k2")).cast("long")).cast("int"))
-    def side(own: String, other: String, idAs: String, sfx: String) =
-      salted.select(
-        Seq(col("bk"), col("s").as(own),
-          explode(sequence(lit(0), col("k1") - 1)).as("ta"),
-          col("k1"), col("k2"), col("id").as(idAs)) ++
-          payload.map(c => col(c).as(c + sfx)): _*)
-        .withColumn("tb", explode(sequence(lit(0), col("k2") - 1)))
-        .withColumn(other, col("ta") + col("k1") * col("tb"))
-        .drop("ta", "tb", "k1", "k2")
-    val l = side("salt0", "salt1", "id0", "0")
-    val r = side("salt1", "salt0", "id1", "1")
-    l.join(r, Seq("bk", "salt0", "salt1"))
-      .where(col("id0") < col("id1"))
-      .drop("salt0", "salt1")
+    // the job total rides the plan as a 1-row scalar broadcast — an
+    // earlier draft used a driver action here, which taxed every
+    // sub-second salted query ~0.3-0.5 s
+    val tot = stats0.agg(least(
+      coalesce(sum(col("n").cast("decimal(38,0)") * col("n")), lit(0)),
+      lit(Long.MaxValue)).cast("long").as("__tp"))
+    val salted = Salting.salt(
+      base.select((Seq("bk", "id") ++ payload).map(col): _*),
+      stats0.crossJoin(broadcast(tot)), "bk",
+      Salting.adaptiveAim(base.sparkSession, col("__tp"), aim), maxK, col("id"))
+    Salting.pairJoin(salted, "bk").where(col("id0") < col("id1"))
   }
-
-  // Signature tables feeding a pair join are referenced 2-3x in one plan
-  // (bucket explode + two confirm-join sides); AQE compiles the branches
-  // as separate stages with no exchange reuse, so without persist the
-  // whole signature scan+UDF pipeline runs per branch (3x the corpus
-  // scan at 100 TB). One cached table per call site, previous unpersisted
-  // (same discipline as Linker.lastChunksCache).
-  //
-  // CONTRACT: at most ONE in-flight query per slot. A second call on the
-  // same slot unpersists the previous DataFrame immediately, so two
-  // concurrent jobs sharing a slot (e.g. two minhashLshPairs actions in
-  // one session) stay CORRECT but the earlier one silently loses its
-  // cache and recomputes the signature pipeline. Callers needing
-  // concurrent runs should manage persistence explicitly.
-  private val lastSigCaches =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def persistLatest(slot: String, df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Option(lastSigCaches.put(slot, p)).foreach { prev =>
-      try if (!(prev eq p) && !prev.sparkSession.sparkContext.isStopped)
-        prev.unpersist(false)
-      catch { case _: Throwable => () }
-    }
-    p
-  }
-
-  /** [[persistLatest]] for other modules' multi-branch subtrees (e.g. the
-    * k-means quantized-vector table); same slot contract. */
-  def persistLatestPublic(slot: String, df: DataFrame): DataFrame =
-    persistLatest(slot, df)
 
   /** Project `score` then threshold-filter WITHOUT Catalyst re-evaluating
     * the scoring expression in both Filter and Project: PushDownPredicates
     * only pushes a filter through an all-deterministic projection, so the
-    * score is wrapped in a value-preserving nondeterministic branch
-    * (`when(monotonically_increasing_id >= 0, score)` — the condition is
-    * always true, the value is bit-identical) that pins the filter ABOVE
-    * the projection. The expensive expression (array intersection / dot
-    * product) is then computed exactly once per candidate row
+    * score is wrapped in [[graft.expr.pinAbove]], which pins the filter
+    * ABOVE the projection. The expensive expression (array intersection /
+    * dot product) is then computed exactly once per candidate row
     * (PlanSpec-gated). */
   def scoreAndFilter(df: DataFrame, name: String, score: Column,
       threshold: Double, keep: String*): DataFrame =
-    df.select(col("*"),
-        when(monotonically_increasing_id() >= 0, score).as(name))
+    df.select(col("*"), pinAbove(score).as(name))
       .where(col(name) >= threshold)
       .select(keep.head, keep.tail: _*)
 
@@ -332,7 +266,9 @@ object Dedup {
     * prefix token (a pathological corpus where one token is rare AND
     * shared by millions of records still fans out); the confirm is the
     * codegen sorted-long merge scan on per-document hashed sets
-    * computed once. Prefixes shuffle (id, sz) only — never the arrays. */
+    * computed once. The hashed sets ride the prefix fan-out, the verify
+    * runs inside the pair-generation stage, and only accepted pairs
+    * shuffle, into a final dedup across shared prefix tokens. */
   def prefixFilterPairs(df: DataFrame, id: String, text: String,
       threshold: Double, aim: Long = PairAim, maxK: Int = 4096): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
@@ -373,7 +309,7 @@ object Dedup {
     // dropping generations that fail the bound removes only duplicates;
     // the exact merge-scan verify (below, same stage) is unchanged.
     val alpha = expr(s"($tnum * (sz0 + sz1) + ${D + tnum - 1}) DIV ${D + tnum}")
-    // the guard projection (scoreAndFilter's trick) pins the accept
+    // the pinAbove projection (scoreAndFilter's trick) pins the accept
     // filter ABOVE the inter projection so the merge scan runs once per
     // surviving generation, not once in Filter and again in Project
     val accepted = saltedSelfPairs(prefix, aim, maxK)
@@ -382,9 +318,8 @@ object Dedup {
       .where(lit(1L) + least(col("sz0") - col("rn0"),
         col("sz1") - col("rn1")) >= alpha)
       .select(col("id0"), col("id1"), col("sz0"), col("sz1"),
-        when(monotonically_increasing_id() >= 0,
-          graft.expr.sortedIntersectCount(col("toks0"), col("toks1"))
-            .cast("long")).as("inter"))
+        pinAbove(graft.expr.sortedIntersectCount(col("toks0"), col("toks1"))
+          .cast("long")).as("inter"))
       .where(col("inter") * D >= (col("sz0") + col("sz1") - col("inter")) * tnum)
     accepted
       .dropDuplicates("id0", "id1")
@@ -444,7 +379,7 @@ object Dedup {
       tot0: Column, tot1: Column, thr: Long): DataFrame =
     pairs
       .select(col("id0"), col("id1"), tot0.as("__t0"), tot1.as("__t1"),
-        when(monotonically_increasing_id() >= 0, minSum).as("wj_num"))
+        pinAbove(minSum).as("wj_num"))
       .withColumn("wj_den", col("__t0") + col("__t1") - col("wj_num"))
       .where(col("wj_num") * lit(1000000L) >= lit(thr) * col("wj_den"))
       .select(col("id0"), col("id1"), col("wj_num"), col("wj_den"),

@@ -13,6 +13,17 @@ package object expr {
   /** Set-bit count of a binary column. */
   def popcount(c: Column): Column = col(Popcount(ex(c)))
 
+  /** `c`, wrapped so a filter on it stays ABOVE the projection computing
+    * it: PushDownPredicates only pushes a filter through an
+    * all-deterministic projection, and without the wrapper Catalyst
+    * substitutes the expression into the filter and evaluates it twice
+    * per row. The wrapper is a value-preserving nondeterministic branch —
+    * the condition is always true and the value is bit-identical. */
+  def pinAbove(c: Column): Column = {
+    import org.apache.spark.sql.functions.{monotonically_increasing_id, when}
+    when(monotonically_increasing_id() >= 0, c)
+  }
+
   /** Dice coefficient of two binary columns. */
   def dice(a: Column, b: Column): Column = col(DiceSimilarity(ex(a), ex(b)))
 

@@ -217,7 +217,7 @@ object Blocking {
       col("rec").as("rec0"), col("truth").as("t0"))
     val b = mem.where(col("dp") === 1).select(col("pred"), col("key"),
       col("rec").as("rec1"), col("truth").as("t1"))
-    val pairs = graft.dedup.Dedup.persistLatestPublic("blocking_scheme",
+    val pairs = graft.core.CacheSlots.persistLatest("blocking_scheme",
       a.join(b, Seq("pred", "key"))
         .select(col("pred"), col("rec0"), col("rec1"),
           (col("t0") === col("t1")).as("istrue"))
@@ -586,7 +586,7 @@ object Blocking {
     // AQE compiles the branches as separate stages with no exchange
     // reuse, so without a persist the whole token join + aggregation runs
     // twice (one-slot cache discipline, unpersisted on the next call)
-    val assigned = graft.dedup.Dedup.persistLatestPublic("canopy",
+    val assigned = graft.core.CacheSlots.persistLatest("canopy",
       toks.join(seedToks, "tok")
         .groupBy("rec", "canopy").agg(count(lit(1)).as("shared"))
         .where(col("shared") >= minShared))

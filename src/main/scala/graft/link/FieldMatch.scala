@@ -49,11 +49,11 @@ object FieldMatch {
     // otherwise substitute the agree expressions into the join condition
     // AND keep them in the projection, evaluating every comparator (incl.
     // the banded Levenshtein) twice per pair — seen in the round-6
-    // q_multifield_match plan dump. The always-true nondeterministic
-    // wrapper pins the minScore filter above this projection.
+    // q_multifield_match plan dump. pinAbove keeps the minScore filter
+    // above this projection.
     val flagged = rules.foldLeft(pairs) { (d, r) =>
       d.withColumn(s"agree_${r.field}",
-        when(monotonically_increasing_id() >= 0,
+        graft.expr.pinAbove(
           coalesce(r.agree(col(r.field + "0"), col(r.field + "1"))
             .cast("long"), lit(0L))))
     }

@@ -95,7 +95,7 @@ object Fuzzy {
     // the weight-list table feeds the pair generator's stats subtree AND
     // both join sides — persist once (the sig-table discipline of the
     // jaccard paths; slot-cached, previous call unpersisted)
-    val wl = graft.dedup.Dedup.persistLatestPublic("soft_tfidf_wl",
+    val wl = graft.core.CacheSlots.persistLatest("soft_tfidf_wl",
       weights.groupBy("id", "bk")
         .agg(sort_array(collect_list(struct(col("t"), col("w")))).as("wl"),
           sqrt(sum(col("w") * col("w")).cast("double")).as("nrm")))

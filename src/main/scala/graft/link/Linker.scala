@@ -3,6 +3,7 @@ package graft.link
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Edge, LinkConfig}
+import graft.core.CacheSlots.persistLatest
 import graft.expr.dicePre
 
 /** Candidate generation + scoring: the reference's
@@ -27,25 +28,6 @@ import graft.expr.dicePre
   * blocks, so replication cost is paid only where skew exists.
   */
 object Linker {
-
-  @volatile private var lastChunksCache: Option[DataFrame] = None
-  @volatile private var lastStatsCache: Option[DataFrame] = None
-
-  /** Register this run's cached frames, unpersisting the previous run's
-    * (bounded to ONE cached chunk table + ONE cached stats frame per
-    * session — the returned edges Dataset is lazy, so both must outlive
-    * this call until the caller's first action; the NEXT call is the
-    * earliest safe unpersist point). */
-  private def registerRunCaches(chunks: Option[DataFrame], stats: DataFrame): Unit =
-    Linker.synchronized {
-      (lastChunksCache.toSeq ++ lastStatsCache.toSeq).foreach { prev =>
-        // previous cache may belong to an already-stopped session
-        try if (!prev.sparkSession.sparkContext.isStopped) prev.unpersist(false)
-        catch { case _: Throwable => }
-      }
-      lastChunksCache = chunks
-      lastStatsCache = Some(stats)
-    }
 
   /** Comparisons per task when decomposing blocks (reference
     * CHUNK_SIZE_AIM=3e8, `settings.py:103`, sized for its C++ kernel).
@@ -95,68 +77,24 @@ object Linker {
       .as[Edge]
   }
 
-  /** Declarative join formulation (semantic spec; see scoreCandidates). */
-  def scoreCandidatesJoin(blocked: DataFrame, cfg: LinkConfig,
-      chunkSizeAim: Long = ChunkSizeAim): Dataset[Edge] = {
+  /** Declarative join formulation (semantic spec; see scoreCandidates):
+    * the plain block-key equi-join, no salting, so the kernel-equality
+    * test shares no pair-generation code with the kernel it checks. */
+  def scoreCandidatesJoin(blocked: DataFrame, cfg: LinkConfig): Dataset[Edge] = {
     val spark = blocked.sparkSession
     import spark.implicits._
-
-    // Per-block fan-out k ~ sqrt(comparisons / aim): block stats are tiny
-    // relative to data (one row per distinct block) -> broadcast join.
-    // (B3 block-metadata agg, database/insertions.py:50-67, doubles as the
-    // skew detector.) The aim adapts downward when the whole job is smaller
-    // than aim * parallelism, so a single huge block still fans out across
-    // every core instead of one 3e8-comparison task pinning one core
-    // (reference behavior: CHUNK_SIZE_AIM splits work into >= #workers
-    // packages only when the job is big; we always target full
-    // parallelism).
-    val statsRaw = blocked.groupBy($"block_key")
-      .agg(count(lit(1)).as("n"))
-      .persist()
-    registerRunCaches(None, statsRaw)
-    // decimal agg + saturating cap: at 10^12-row blocks n^2 exceeds Long
-    val totalPairsUb = statsRaw
-      .agg(coalesce(sum($"n".cast("decimal(38,0)") * $"n"), lit(0)))
-      .head().getDecimal(0).toBigInteger.min(
-        java.math.BigInteger.valueOf(Long.MaxValue)).longValue()
-    val parallelism = math.max(spark.sparkContext.defaultParallelism, 1)
-    // effective tasks ~= totalPairs/(2*aim) (the dp0<dp1 filter halves the
-    // k^2 chunk pairs) -> divisor 6 targets ~3 waves per core
-    val aim = math.max(1000000L,
-      math.min(chunkSizeAim, totalPairsUb / (6L * parallelism) + 1))
-    val stats = statsRaw
-      .withColumn("k",
-        least(
-          greatest(
-            ceil($"n".cast("double") / math.sqrt(aim.toDouble)),
-            lit(1L)),
-          lit(1024L)).cast("int"))
-      .select($"block_key", $"k")
-
-    val salted = blocked.join(broadcast(stats), Seq("block_key"))
-      .withColumn("salt", pmod(xxhash64($"dp", $"entity_id"), $"k").cast("int"))
-
-    val left = salted.select(
-      $"block_key", $"k",
-      $"salt".as("salt0"),
-      explode(sequence(lit(0), $"k" - 1)).as("salt1"),
+    val left = blocked.select($"block_key",
       $"dp".as("dp0"), $"entity_id".as("rec0"), $"clk".as("clk0"), $"popcount".as("pc0"))
-    val right = salted.select(
-      $"block_key",
-      explode(sequence(lit(0), $"k" - 1)).as("salt0"),
-      $"salt".as("salt1"),
+    val right = blocked.select($"block_key",
       $"dp".as("dp1"), $"entity_id".as("rec1"), $"clk".as("clk1"), $"popcount".as("pc1"))
-
-    val scored = left.join(right, Seq("block_key", "salt0", "salt1"))
+    // A pair can co-occur in multiple shared blocks -> collapse
+    // (reference dedups during merge, comparing.py:475-483).
+    left.join(right, "block_key")
       .where($"dp0" < $"dp1")
       .select(
         dicePre($"clk0", $"clk1", $"pc0" + $"pc1").as("sim"),
         $"dp0", $"rec0", $"dp1", $"rec1")
       .where($"sim" >= cfg.threshold)
-
-    // A pair can co-occur in multiple shared blocks -> collapse
-    // (reference dedups during merge, comparing.py:475-483).
-    scored
       .dropDuplicates("dp0", "rec0", "dp1", "rec1")
       .as[Edge]
   }
@@ -200,10 +138,9 @@ object Linker {
     // would trigger Catalyst's Expand-based distinct rewrite and push 2x
     // the rows through the shuffle.
     val withH = blocked.withColumn("bkh", xxhash64($"block_key"))
-    val statsRaw = withH.groupBy($"bkh")
+    val statsRaw = persistLatest("linker_stats", withH.groupBy($"bkh")
       .agg(count(lit(1)).as("n"),
-        (min($"dp") =!= max($"dp")).as("cross_dp"))
-      .persist()
+        (min($"dp") =!= max($"dp")).as("cross_dp")))
 
     // A block confined to ONE provider can never emit a dp0<dp1 pair.
     // With LSH banding most band values are unique to one document, so at
@@ -245,20 +182,7 @@ object Linker {
     // inflate the aim (which would under-split what remains).
     val totalPairsUb = if (prefilter) pairsUbCross else pairsUbAll
 
-    val parallelism = math.max(spark.sparkContext.defaultParallelism, 1)
-    // effective tasks ~= totalPairs/(2*aim) (the dp0<dp1 filter halves the
-    // k^2 chunk pairs) -> divisor 6 targets ~3 waves per core
-    val aim = math.max(1000000L,
-      math.min(chunkSizeAim, totalPairsUb / (6L * parallelism) + 1))
-    // composite two-level fan-out k1*k2 >= n/sqrt(aim) (Salting): one salt
-    // digit caps at maxK, so a block needing more splits on a second digit
-    // instead of silently under-splitting into ~(needK/maxK)^2-times-aim
-    // tasks. Only skewed blocks (k > 1) ride the broadcast; k=1 defaults
-    // via the left join (block-key cardinality can be O(rows) at scale).
-    val (k1c, k2c) = Salting.fanout($"n", aim, maxK)
-    val stats = statsBase
-      .select($"bkh", k1c.as("k1"), k2c.as("k2"))
-      .where($"k1" > 1 || $"k2" > 1)
+    val aim = Salting.adaptiveAim(spark, lit(totalPairsUb), chunkSizeAim)
 
     // Chunks are packed ONCE at aggregation time into primitive arrays
     // (ids, popcounts, one contiguous zero-padded clk buffer, sorted by
@@ -266,12 +190,12 @@ object Linker {
     // measured to generate enough garbage to send later rounds into GC
     // collapse; primitive arrays deserialize with zero boxing and the
     // popcount sort is paid once per chunk instead of once per chunk pair.
-    val chunks = kept.join(broadcast(stats), Seq("bkh"), "left")
-      .withColumn("k1", coalesce($"k1", lit(1)))
-      .withColumn("k2", coalesce($"k2", lit(1)))
-      .withColumn("salt",
-        pmod(xxhash64($"dp", $"entity_id"), ($"k1" * $"k2").cast("long")).cast("int"))
-      .select($"block_key", $"k1", $"k2", $"dp", $"salt", $"entity_id", $"clk", $"popcount")
+    // Cached: both join branches derive from this subtree and AQE compiles
+    // them as separate query stages (no exchange reuse) — without the
+    // cache the whole scan+encode+pack pipeline runs twice.
+    val chunks = persistLatest("linker_chunks",
+      Salting.salt(kept, statsBase, "bkh", aim, maxK, $"dp", $"entity_id")
+      .select($"block_key", $"k1", $"k2", $"dp", $"s", $"entity_id", $"clk", $"popcount")
       .as[(String, Int, Int, Int, Int, Long, Array[Byte], Int)]
       .groupByKey(r => (r._1, r._2, r._3, r._4, r._5))
       .mapGroups { (key: (String, Int, Int, Int, Int), it: Iterator[(String, Int, Int, Int, Int, Long, Array[Byte], Int)]) =>
@@ -296,36 +220,10 @@ object Linker {
         }
         (bk, k1, k2, dp, salt, stride, ids, pcs, pch, flat)
       }
-      .toDF("block_key", "k1", "k2", "dp", "salt", "stride", "ids", "pcs", "pch", "flat")
-      // both join branches derive from this subtree and AQE compiles them
-      // as separate query stages (no exchange reuse) — without caching,
-      // the whole scan+encode+pack pipeline runs twice. Bounded to one
-      // cached chunk table per session (previous call unpersisted).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registerRunCaches(Some(chunks), statsRaw)
-
-    // other-side salt range = two chained explodes (bounded by maxK each),
-    // composite digit recombined as ta + k1*tb — equivalent to one
-    // sequence(0, k1*k2-1) without ever materializing a k1*k2-long array
-    val left = chunks.select($"block_key",
-      $"salt".as("salt0"), explode(sequence(lit(0), $"k1" - 1)).as("ta"),
-      $"k1", $"k2",
-      $"dp".as("dp0"), $"stride".as("stride0"),
-      $"ids".as("ids0"), $"pcs".as("pcs0"), $"pch".as("pch0"), $"flat".as("flat0"))
-      .withColumn("tb", explode(sequence(lit(0), $"k2" - 1)))
-      .withColumn("salt1", $"ta" + $"k1" * $"tb")
-      .drop("ta", "tb", "k1", "k2")
-    val right = chunks.select($"block_key",
-      $"salt".as("salt1"), explode(sequence(lit(0), $"k1" - 1)).as("ta"),
-      $"k1", $"k2",
-      $"dp".as("dp1"), $"stride".as("stride1"),
-      $"ids".as("ids1"), $"pcs".as("pcs1"), $"pch".as("pch1"), $"flat".as("flat1"))
-      .withColumn("tb", explode(sequence(lit(0), $"k2" - 1)))
-      .withColumn("salt0", $"ta" + $"k1" * $"tb")
-      .drop("ta", "tb", "k1", "k2")
+      .toDF("block_key", "k1", "k2", "dp", "s", "stride", "ids", "pcs", "pch", "flat"))
 
     val threshold = cfg.threshold
-    val pairsDs = left.join(right, Seq("block_key", "salt0", "salt1"))
+    val pairsDs = Salting.pairJoin(chunks, "block_key")
       .where($"dp0" < $"dp1")
       .select($"dp0", $"stride0", $"ids0", $"pcs0", $"pch0", $"flat0",
         $"dp1", $"stride1", $"ids1", $"pcs1", $"pch1", $"flat1")

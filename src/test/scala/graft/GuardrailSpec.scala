@@ -44,5 +44,24 @@ class CacheDisciplineSpec extends SparkSpec {
     // one run adds at most the current chunks + stats frames
     assert(after1 - before <= 2,
       s"one run added ${after1 - before} persistent RDDs (expected <=2)")
+    // plan-equal runs (JSON reads of one fixture): replacing a cache slot
+    // must not drop the entry the new, plan-equal frame was registered
+    // under, so every run plans as many cached relations as the first
+    def cachedRelations(): Int = {
+      import org.apache.spark.sql.functions.{col, explode}
+      val path = s"$fixturesDir/test_encodings_blocks.json"
+      val blocked = Seq(0, 1).map(dp => graft.ingest.ClkIO.readJson(spark, path, dp))
+        .reduce(_ union _)
+        .select(col("dp"), col("entity_id"), col("clk"), col("popcount"),
+          explode(col("blocks")).as("block_key"))
+      val edges = Linker.scoreCandidates(blocked, LinkConfig(threshold = 0.8)).toDF()
+      edges.count()
+      "InMemoryRelation".r.findAllMatchIn(
+        edges.queryExecution.optimizedPlan.toString).size
+    }
+    val first = cachedRelations()
+    val second = cachedRelations()
+    assert(first > 0 && second == first,
+      s"plan-equal runs planned $first then $second cached relations")
   }
 }

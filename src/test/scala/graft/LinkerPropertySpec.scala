@@ -91,6 +91,21 @@ class LinkerPropertySpec extends SparkSpec {
     // fan-out math: k1*k2 covers needK whenever needK <= maxK^2, so no
     // chunk pair exceeds ~aim comparisons in expectation (the old
     // single-digit cap silently under-split: k stuck at maxK)
+    // the Column fan-out Spark evaluates == its Scala mirror, grid-wide
+    val grid = for {
+      n <- Seq(1L, 10L, 100L, 1000L, 100000L, 1000000000L)
+      (a, maxK) <- Seq((aim, 4), (50L, 16), (1000000L, 4096),
+        (Linker.ChunkSizeAim, Linker.MaxSaltFanout))
+    } yield (n, a, maxK)
+    val row = spark.range(1).select(grid.flatMap { case (n, a, maxK) =>
+      val (k1, k2) = graft.link.Salting.fanout(lit(n), lit(a), maxK)
+      Seq(k1, k2)
+    }: _*).head()
+    grid.zipWithIndex.foreach { case ((n, a, maxK), i) =>
+      val got = (row.getInt(2 * i), row.getInt(2 * i + 1))
+      assert(got == graft.link.Salting.fanoutScala(n, a, maxK),
+        s"n=$n aim=$a maxK=$maxK column fan-out $got")
+    }
     for (n <- Seq(1L, 10L, 100L, 1000L, 100000L, 1000000000L)) {
       val needK = math.max(math.ceil(n / math.sqrt(aim.toDouble)).toLong, 1L)
       val (k1, k2) = graft.link.Salting.fanoutScala(n, aim, 4)
